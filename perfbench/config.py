@@ -7,30 +7,40 @@ different seeds do the same amount of work.
 
 from __future__ import annotations
 
-# The client: one process at local[min(CPUS, nproc)]. Three task threads
-# on a 4-vCPU box leave a core for the JVM's compiler and GC threads, the
-# client's Python process and the harness: at local[4] the run-to-run
-# spread of latency_p50_s was about twice that at local[3]. The heap is
-# sized for a shared 15 GiB machine (the package default of 48g would
-# overcommit it); the workloads' data is a few MB.
-CPUS = 3
+# The client: one process at local[min(CPUS, nproc)]. Two task threads
+# on a 4-vCPU box shared with other tenants leave cores for the JVM's
+# compiler and GC threads, the client's Python process and its Python
+# workers. Alternated on the same seeds, local[2] ran the crm workload
+# 5-9% faster than local[3] with half the run-to-run spread of
+# latency_p50_s (0.15 against 0.30); at local[4] that spread was about
+# twice that at local[3]. The heap is sized for a shared 15 GiB machine
+# (the package default of 48g would overcommit it); the workloads' data
+# is a few MB.
+CPUS = 2
 HEAP = "1g"
 
-# Setups per run; setup_s is their median. The first, in a cold JVM,
-# includes the JVM launch (reported as session.get_spark_s) and is
-# followed by an untimed warm-up round; the timed rounds follow the last.
-# (A second warm-up round made the first timed round about 10% faster but
-# did not narrow the run-to-run spread, and the whole benchmark must fit
-# its time budget.)
-SETUP_REPEATS = 3
+# Each run sets up once, in a cold JVM: setup_s covers the JVM launch
+# (reported as session.get_spark_s), input generation, the initial load
+# and the warm-up rounds; the timed rounds follow. Setting up again in
+# the same process would reuse the warm JVM, and a fresh JVM per repeat
+# costs about 20 s of the benchmark's time budget each. One warm-up round
+# takes the first-call cost (the corpus round: 22 s cold, 9 s next), but
+# the JVM keeps warming after it (the corpus round was about 30% faster
+# again by its sixth call); more warm-up rounds do not fit the budget.
 WARM_UP_ROUNDS = 1
 TIMED_ROUNDS_MIN = 2
 
 # -- crm_incremental_sync: the org ------------------------------------------
 
-# Initial rows per table (the working set: ~10 MB of Python records and
-# ~2 MB of snappy parquet, far below the 1 GiB JVM heap).
-ORG_SIZES = {"account": 6_000, "contact": 3_000, "task": 4_000}
+# Initial rows per table (the working set: ~30 MB of Python records and
+# ~3 MB of snappy parquet, far below the 1 GiB JVM heap). account, the
+# merge table, holds 33 times its 600-row batches, so each merge rewrites
+# 34 rows per row merged; that copy-on-write rewrite is about half of
+# each account sync. A larger table adds little: on 4 vCPUs the rewrite
+# took 1.2 s at 20k rows and 1.8 s at 100k (about 7 us a row more), the
+# change feed's read of account grows as fast, and setup and every round
+# grow against the time budget.
+ORG_SIZES = {"account": 20_000, "contact": 3_000, "task": 4_000}
 # Resources synced, in load order: merge on Id with a LastModifiedDate
 # cursor, replace, and merge without a key (the writer falls back to
 # append).

@@ -9,7 +9,7 @@ the run started, and prints as its last line one JSON
 object: ``correct``, ``attempted``, ``failed`` and ``metrics`` (the
 end-to-end metrics with ``--trace 0``, the per-layer ones with
 ``--trace 1``). The line before it is a JSON object of run details:
-setup times, sample counts, the tail percentile used, the load average
+setup phases, sample counts, the tail percentile used, the load average
 at start and the pinned environment.
 
 Everything the run writes goes under ``perfbench/.work`` in the
@@ -176,7 +176,7 @@ def main() -> int:
     metrics = {k: {"value": values[k], "unit": u} for k, u in units.items()}
     details = {
         "workload": args.workload, "seed": args.seed,
-        "setup_runs_s": doc["setup_runs_s"], "phases": doc["phases"], "ops": doc["ops"],
+        "phases": doc["phases"], "ops": doc["ops"],
         "op_latency_s": doc["op_latency_s"],
         "tail_percentile": doc["tail_percentile"], "failed_ratio": failed / attempted,
         "load_avg_at_start": load_avg,

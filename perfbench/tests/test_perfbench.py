@@ -50,7 +50,7 @@ def test_org_refuses_updates_to_keyless_merge_tables(tiny):
 
 def test_transport_serves_only_rows_past_the_cursor(tiny):
     org = Org(3, TINY_ORG)
-    tr = BenchTransport(org, page_size=25)
+    tr = BenchTransport(org)
     key = "LastModifiedDate"
     full = [r for page in tr.query_bulk("Account", f"SELECT Id, {key} FROM Account "
                                         f"ORDER BY {key} ASC") for r in page]
@@ -157,3 +157,16 @@ def test_sync_check_catches_a_dropped_merge_row(tiny, spark, tmp_path):
     w.transport.drop_next_merge_row = True
     bad = _one_round(w)
     assert any(m.startswith("account: lake (rows, hash)") for m in bad), bad
+
+
+def test_corpus_check_covers_every_call(tiny, spark, tmp_path):
+    from perfbench.tracing import Tracer
+    from perfbench.workloads import CorpusDedupSearch
+
+    w = CorpusDedupSearch(13, tmp_path, spark, Tracer(spark.sparkContext))
+    w.setup()
+    w.run("bm25_topk")
+    assert w.check_op("bm25_topk") == []
+    w.run("bm25_topk")
+    w.rows = w.rows[1:]  # a later call that loses its top hit
+    assert w.check_op("bm25_topk") == ["bm25_topk: ranking differs from the replayed scores"]

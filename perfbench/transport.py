@@ -8,7 +8,7 @@ sync costs the simulated server O(batch), not O(table). Full reads
 (replace tables, first loads) are inherently O(table).
 
 Only the Bulk API shape is served (datetimes as epoch millis, an
-``attributes`` envelope on every record), in pages of ``page_size``.
+``attributes`` envelope on every record), each query's rows as one page.
 In traced rounds each query is a span of its own: the simulated
 server's time, reported apart from the program's as
 ``sources.salesforce.transport_s``.
@@ -38,9 +38,8 @@ def _parse_ms(value: str) -> int:
 
 
 class BenchTransport:
-    def __init__(self, org: Org, page_size: int = 10_000, tracer=None) -> None:
+    def __init__(self, org: Org, tracer=None) -> None:
         self.org = org
-        self.page_size = page_size
         self.tracer = tracer
         self._table = {obj: t for t, (obj, _, _) in OBJECTS.items()}
         self._describes = {obj: describe(t) for t, (obj, _, _) in OBJECTS.items()}
@@ -55,14 +54,13 @@ class BenchTransport:
     def query_bulk(self, sobject: str, soql: str) -> Iterator[list[dict[str, Any]]]:
         span = self.tracer.open("sources.salesforce.transport") if self.tracer else None
         rows = self._select(sobject, soql)
-        pages = [rows[i : i + self.page_size] for i in range(0, len(rows), self.page_size)]
         if span is not None:
             table = self._table[sobject]
             self.tracer.spans[span].attrs.update(
                 rows_fetched=len(rows), bytes_fetched=sum(self.org.nbytes[table][r["Id"]] for r in rows)
             )
             self.tracer.close(span)
-        return iter(pages)
+        return iter([rows])
 
     def query_standard(self, soql: str) -> Iterator[list[dict[str, Any]]]:
         raise NotImplementedError("the benchmark org serves the Bulk API only")

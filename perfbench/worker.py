@@ -11,7 +11,6 @@ import argparse
 import json
 import logging
 import math
-import shutil
 import statistics
 import time
 from collections import defaultdict
@@ -48,13 +47,14 @@ def percentile(values: list[float], p: int) -> float:
 
 @dataclass
 class Loop:
-    """What the timed rounds produced, across every measured setup."""
+    """What a series of rounds produced."""
 
     samples: dict[bool, list[tuple[str, float, int]]] = field(
         default_factory=lambda: {False: [], True: []}
     )
     changed_traced: int = 0  # source rows changed for the traced operations
     failures: list[str] = field(default_factory=list)  # failed operations and checks
+    check_s: float = 0.0  # time spent in output checks
     op_id: int = 0
 
 
@@ -88,7 +88,9 @@ def measure(w, seconds: float, min_rounds: int, tracer: Tracer, trace: bool,
                 tracer.stop()
                 tracer.resolve_jobs(first_span)
             loop.samples[traced].append((kind, dt, rows))
+            t0 = time.perf_counter()
             loop.failures += [f"{kind}: {m}" for m in w.check_op(kind)]
+            loop.check_s += time.perf_counter() - t0
             loop.op_id += 1
         n_round += 1
 
@@ -210,33 +212,24 @@ def main() -> None:
     logging.basicConfig(level=logging.WARNING)
     logging.getLogger("dlt_salesforce_iceberg_rest_demo_spark").setLevel(logging.ERROR)
 
-    # Setups, each on a fresh SparkContext and all identical (same seed):
-    # the first, in a cold JVM, is followed by untimed warm-up rounds, so
-    # code is compiled before timing; the timed rounds run on the last.
+    # setup_s: one setup in a cold JVM, from the session start through
+    # input generation, the initial load and the warm-up rounds that
+    # compile code before the timed rounds (less their output checks).
     # Output checks run on every round, warm-up included.
-    cls = WORKLOADS[args.workload]
-    setup_s: list[float] = []
     loop, warm = Loop(), Loop()
     phases: dict[str, float] = {}
-    spark = None
     tracer = Tracer(None)
-    for k in range(C.SETUP_REPEATS):
-        t0 = time.perf_counter()
-        if spark is not None:
-            spark.stop()
-        spark = start_spark(args.work)
-        tracer.sc = spark.sparkContext
-        if k == 0:
-            phases["get_spark_cold_s"] = time.perf_counter() - t0
-        w = cls(args.seed, args.work / f"setup{k}", spark, tracer)
-        w.setup()
-        setup_s.append(time.perf_counter() - t0)
-        if k == 0:
-            t1 = time.perf_counter()
-            measure(w, 0, C.WARM_UP_ROUNDS, tracer, False, warm)
-            phases["warm_up_s"] = time.perf_counter() - t1
-        if k < C.SETUP_REPEATS - 1:
-            shutil.rmtree(w.root, ignore_errors=True)
+    t0 = time.perf_counter()
+    spark = start_spark(args.work)
+    tracer.sc = spark.sparkContext
+    phases["get_spark_s"] = time.perf_counter() - t0
+    w = WORKLOADS[args.workload](args.seed, args.work / "setup", spark, tracer)
+    w.setup()
+    phases["load_s"] = time.perf_counter() - t0 - phases["get_spark_s"]
+    t1 = time.perf_counter()
+    measure(w, 0, C.WARM_UP_ROUNDS, tracer, False, warm)
+    phases["warm_up_s"] = time.perf_counter() - t1 - warm.check_s
+    setup_s = time.perf_counter() - t0 - warm.check_s
     t0 = time.perf_counter()
     measure(w, args.seconds, C.TIMED_ROUNDS_MIN, tracer, bool(args.trace), loop)
     phases["loop_s"] = time.perf_counter() - t0
@@ -251,8 +244,7 @@ def main() -> None:
     for kind, dt, _ in untraced:
         op_latency[kind].append(round(dt, 4))
     doc = {
-        "setup_s": statistics.median(setup_s),
-        "setup_runs_s": setup_s,
+        "setup_s": setup_s,
         "storage_bytes_per_user_byte": w.storage_ratio(),
         "attempted": len(untraced) + len(traced),
         "failures": loop.failures[:20],
@@ -262,7 +254,7 @@ def main() -> None:
         **e2e,
     }
     if args.trace:
-        layer = per_layer(w, tracer, phases["get_spark_cold_s"], len(traced),
+        layer = per_layer(w, tracer, phases["get_spark_s"], len(traced),
                           loop.changed_traced, sum(r for _, _, r in traced))
         layer["trace.overhead_ratio"] = tracing_overhead(loop)
         doc["per_layer"] = layer
