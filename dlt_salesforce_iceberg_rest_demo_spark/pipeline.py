@@ -120,23 +120,16 @@ class SalesforcePipeline:
 
         disposition = "replace" if force_replace else cfg.write_disposition
         pk = tuple(snake_case(k) for k in cfg.primary_key)
-        if audit is not None:
-            branch = f"wap_{load_id}"
-            report = self.lake.write_to_branch(
-                normalized, cfg.name, disposition, pk, branch=branch
-            )
-            if audit(self.lake.read(cfg.name, branch), cfg.name):
+        branch = None if audit is None else f"wap_{load_id}"
+        report = self.lake.write(normalized, cfg.name, disposition, pk, branch=branch)
+        if branch is not None:
+            published = audit(self.lake.read(cfg.name, branch), cfg.name)
+            if published:
                 self.lake.fast_forward(cfg.name, branch)
-                self.lake.drop_branch(cfg.name, branch)
-            else:
-                self.lake.drop_branch(cfg.name, branch)
+            self.lake.drop_branch(cfg.name, branch)
+            if not published:
                 # failed audit: nothing published, cursor must not move
-                return (
-                    WriteReport(cfg.name, disposition, 0, fallback_append=False),
-                    None,
-                )
-        else:
-            report = self.lake.write(normalized, cfg.name, disposition, pk)
+                return WriteReport(cfg.name, disposition, 0), None
 
         cursor_value: str | None = None
         if cfg.replication_key:

@@ -45,7 +45,7 @@ import shutil
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -237,8 +237,14 @@ class ParquetLake:
             return data, None
         return data["dirs"], data.get("committed_at")
 
-    def _current_manifest(self, table: str) -> list[str]:
-        return self._manifest_info(table, self._current_version(table))[0]
+    def _head(self, table: str, branch: str | None = None) -> int:
+        """Head version of main (``branch`` None) or of a branch."""
+        if branch is None:
+            return self._current_version(table)
+        return self._branch_version(table, branch)
+
+    def _current_manifest(self, table: str, branch: str | None = None) -> list[str]:
+        return self._manifest_info(table, self._head(table, branch))[0]
 
     def _commit(self, table: str, data_dirs: list[str], branch: str | None = None) -> None:
         """Write a new manifest then atomically swing a pointer — the
@@ -250,11 +256,7 @@ class ParquetLake:
         import time
 
         tdir = self.root / table
-        parent = (
-            self._branch_version(table, branch)
-            if branch is not None
-            else self._current_version(table)
-        )
+        parent = self._head(table, branch)
         existing = [int(m.name.split(".")[1]) for m in tdir.glob("_MANIFEST.*.json")]
         v = (max(existing) if existing else -1) + 1
         (tdir / f"_MANIFEST.{v}.json").write_text(
@@ -278,7 +280,7 @@ class ParquetLake:
     def branches(self, table: str) -> dict[str, int]:
         """Named MUTABLE heads: branch name -> head version. Unlike tags
         (:meth:`set_ref`, pinned forever), a branch advances when
-        written to via ``append_to_branch``."""
+        written to via ``write(..., branch=name)``."""
         p = self.root / table / "_BRANCHES.json"
         return json.loads(p.read_text()) if p.exists() else {}
 
@@ -309,73 +311,6 @@ class ParquetLake:
         b = self.branches(table)
         b.pop(name, None)
         self._write_branches(table, b)
-
-    def append_to_branch(self, df: DataFrame, table: str, branch: str) -> WriteReport:
-        """W1 append against a BRANCH head: new branch snapshot = branch
-        manifest + one new data dir; main's pointer is untouched. Same
-        empty-batch no-op rule as :meth:`append`."""
-        df = self._prepare(table, df)
-        name, rows = self._new_data_dir(table, df)
-        if rows == 0:
-            shutil.rmtree(self.root / table / name, ignore_errors=True)
-            return WriteReport(table, "append", 0)
-        head = self._branch_version(table, branch)
-        dirs = self._manifest_info(table, head)[0]
-        self._commit(table, dirs + [name], branch=branch)
-        return WriteReport(table, "append", rows)
-
-    def write_to_branch(
-        self,
-        df: DataFrame,
-        table: str,
-        disposition: str,
-        primary_key: tuple[str, ...] | list[str] = (),
-        *,
-        branch: str,
-    ) -> WriteReport:
-        """WAP staging write: the same disposition semantics as
-        :meth:`write` (append / replace / merge with the W4 fallbacks
-        and the batch-local-duplicates merge quirk), committed to a
-        BRANCH head instead of main — the write half of
-        write-audit-publish. The table (and the branch, forked at the
-        current main snapshot) auto-create on first contact; merge
-        reads its base from the BRANCH, so multiple staged batches
-        compose before one audit + fast_forward publishes them all.
-        """
-        if not self.exists(table):
-            self.create_table(table, df.schema)
-        if branch not in self.branches(table):
-            self.create_branch(table, branch)
-        if disposition == "append":
-            return self.append_to_branch(df, table, branch)
-        df = self._prepare(table, df)
-        if disposition == "replace":
-            name, rows = self._new_data_dir(table, df)
-            self._commit(table, [name], branch=branch)
-            return WriteReport(table, "replace", rows)
-        if disposition != "merge":
-            raise ValueError(f"unknown disposition: {disposition}")
-        pk = [k for k in primary_key]
-        missing = [k for k in pk if k not in df.columns]
-        if not pk or missing:
-            logger.warning(
-                "merge-to-branch for %s without usable primary key %s: "
-                "falling back to append",
-                table,
-                pk,
-            )
-            rep = self.append_to_branch(df, table, branch)
-            return WriteReport(table, "merge", rep.rows_written, fallback_append=True)
-        batch_rows = df.count()
-        if batch_rows == 0:
-            return WriteReport(table, "merge", 0)
-        base = self.read(table, branch, with_tombstones=True)
-        keys = df.select(*pk).distinct()
-        kept = base.join(F.broadcast(keys), pk, "left_anti")
-        merged = kept.unionByName(df)
-        name, _total = self._new_data_dir(table, merged)
-        self._commit(table, [name], branch=branch)
-        return WriteReport(table, "merge", batch_rows)
 
     def _manifest_parent(self, table: str, v: int) -> int | None:
         data = json.loads((self.root / table / f"_MANIFEST.{v}.json").read_text())
@@ -519,10 +454,7 @@ class ParquetLake:
         The row count rides the write itself via ``observe()`` (one
         scan total) - the previous read-back count was a second full
         scan of just-written data per commit, which at 100 TB doubles
-        every load's I/O. Falls back to the read-back count if the
-        observation can't attach (non-classic backends)."""
-        from pyspark.sql import Observation
-
+        every load's I/O."""
         tdir = self.root / table
         # Allocate past any existing dir, not main-version + 1: branch
         # commits write data dirs without advancing the main pointer,
@@ -534,21 +466,13 @@ class ParquetLake:
         ]
         v = max(existing, default=self._current_version(table)) + 1
         name = f"data_{v:06d}"
-        try:
-            obs = Observation(f"rows_{table}_{v}")
-            df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-        except Exception:
-            obs = None
-        writer = df.write.mode("errorifexists")
+        obs = Observation(f"rows_{table}_{v}")
+        writer = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("errorifexists")
         parts = self.partition_columns(table)
         if parts:
             writer = writer.partitionBy(*parts)
         writer.parquet(str(tdir / name))
-        if obs is not None:
-            rows = int(obs.get["n"])
-        else:
-            rows = self.spark.read.parquet(str(tdir / name)).count()
-        return name, rows
+        return name, int(obs.get["n"])
 
     # -- W5: auto-create ---------------------------------------------------
 
@@ -624,8 +548,16 @@ class ParquetLake:
 
     # -- W1/W2/W3 dispositions ----------------------------------------------
 
-    def append(self, df: DataFrame, table: str, evolve: bool = False) -> WriteReport:
-        """W1: new snapshot = old manifest + one new data dir.
+    def append(
+        self,
+        df: DataFrame,
+        table: str,
+        evolve: bool = False,
+        *,
+        branch: str | None = None,
+    ) -> WriteReport:
+        """W1: new snapshot = old manifest + one new data dir, on main or
+        on ``branch`` (which must exist; :meth:`write` forks it).
 
         An empty batch is a no-op: no data dir, no commit. dlt never
         invokes the destination for a zero-item batch, so an idle
@@ -641,15 +573,17 @@ class ParquetLake:
         if rows == 0:
             shutil.rmtree(self.root / table / name, ignore_errors=True)
             return WriteReport(table, "append", 0)
-        self._commit(table, self._current_manifest(table) + [name])
+        self._commit(table, self._current_manifest(table, branch) + [name], branch=branch)
         return WriteReport(table, "append", rows)
 
-    def replace(self, df: DataFrame, table: str) -> WriteReport:
+    def replace(
+        self, df: DataFrame, table: str, *, branch: str | None = None
+    ) -> WriteReport:
         """W2: new snapshot = exactly the new data dir. One atomic commit
         (the reference needs two: delete(AlwaysTrue) + append)."""
         df = self._prepare(table, df)
         name, rows = self._new_data_dir(table, df)
-        self._commit(table, [name])
+        self._commit(table, [name], branch=branch)
         return WriteReport(table, "replace", rows)
 
     def merge(
@@ -658,7 +592,7 @@ class ParquetLake:
         table: str,
         primary_key: tuple[str, ...] | list[str],
         *,
-        dedupe_batch: bool = False,
+        branch: str | None = None,
     ) -> WriteReport:
         """W3 merge = batch-local delete-then-insert upsert
         (salesforce_pipeline.py:83-130):
@@ -670,71 +604,63 @@ class ParquetLake:
 
         Reference quirk preserved: duplicate PKs *within* one batch
         survive as duplicates (the delete runs before the insert, against
-        the base only). ``dedupe_batch=True`` opts into keep-last-by-
-        batch-order instead - the documented idiomatic improvement
-        (SURVEY §7 "What's hard").
+        the base only).
 
-        W4 fallbacks: no declared PK, or PK columns absent from the
-        data -> warn + append (salesforce_pipeline.py:131-138).
+        First contact (no table yet) creates the table through
+        :meth:`append`. W4 fallbacks: no declared PK, or PK columns
+        absent from the table schema -> warn + append
+        (salesforce_pipeline.py:131-138).
         """
         pk = list(primary_key)
         if not self.exists(table):
-            df0 = self._prepare(table, df)
-            name, rows = self._new_data_dir(table, df0)
-            self._commit(table, [name])
-            # Reference emits the no-PK warning on every load, including
+            rep = self.append(df, table, branch=branch)
+            # Reference flags the no-PK fallback on every load, including
             # first contact (salesforce_pipeline.py:131-138).
-            return WriteReport(table, "merge", rows, fallback_append=not pk)
+            return WriteReport(table, "merge", rep.rows_written, fallback_append=not pk)
+        # The aligned batch has exactly the schema's columns, so the key
+        # check runs on the schema and the fallback aligns only once.
+        missing = [k for k in pk if k not in self.schema(table).fieldNames()]
+        if not pk or missing:
+            logger.warning(
+                "merge disposition for %s without usable primary key %s "
+                "(missing %s): falling back to append",
+                table,
+                pk,
+                missing,
+            )
+            rep = self.append(df, table, branch=branch)
+            return WriteReport(table, "merge", rep.rows_written, fallback_append=True)
 
         df = self._prepare(table, df)
-        if not pk:
-            logger.warning(
-                "merge disposition for %s without primary key: falling back to append",
-                table,
-            )
-            rep = self.append(df, table)
-            return WriteReport(table, "merge", rep.rows_written, fallback_append=True)
-        missing = [k for k in pk if k not in df.columns]
-        if missing:
-            logger.warning(
-                "merge keys %s not present in batch for %s: falling back to append",
-                missing,
-                table,
-            )
-            rep = self.append(df, table)
-            return WriteReport(table, "merge", rep.rows_written, fallback_append=True)
-
-        if dedupe_batch:
-            from pyspark.sql import Window
-
-            order = [F.col(c).desc() for c in df.columns if c not in pk]
-            w = Window.partitionBy(*pk).orderBy(*(order or [F.lit(1)]))
-            df = (
-                df.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-
         # Empty incremental batch -> no-op. Without this, copy-on-write
         # would rewrite the whole table for an idle cursor poll - O(table)
         # for zero changes, catastrophic at scale.
         batch_rows = df.count()
         if batch_rows == 0:
             return WriteReport(table, "merge", 0)
-
-        # with_tombstones: the copy-on-write rewrite must carry guard
-        # tombstones for untouched keys; a tombstone whose key the plain
-        # merge upserts is replaced (guard state erased for that key —
-        # the documented unguarded-write contract in merge_cdc).
-        base = self.read(table, with_tombstones=True)
-        keys = df.select(*pk).distinct()
-        kept = base.join(F.broadcast(keys), pk, "left_anti")
-        merged = kept.unionByName(df)
-        name, _total = self._new_data_dir(table, merged)
-        self._commit(table, [name])
+        self._upsert(table, df.select(*pk).distinct(), df, branch)
         # rows_written = batch rows loaded (the reference's LoadInfo
         # semantics), not the copy-on-write rewrite size.
         return WriteReport(table, "merge", batch_rows)
+
+    def _upsert(
+        self,
+        table: str,
+        touched_keys: DataFrame,
+        rows: DataFrame,
+        branch: str | None = None,
+    ) -> None:
+        """Copy-on-write upsert, the one rewrite :meth:`merge` and
+        :meth:`merge_cdc` share: commit a snapshot of the base rows whose
+        key is not in ``touched_keys`` (a distinct key-column frame,
+        broadcast - batch-sized) plus ``rows`` (already aligned to the
+        table schema). The base is read with tombstones, so guard state
+        of untouched keys survives; a touched key's tombstone falls to
+        the anti-join (the unguarded-write contract in :meth:`merge_cdc`)."""
+        base = self.read(table, branch, with_tombstones=True)
+        kept = base.join(F.broadcast(touched_keys), touched_keys.columns, "left_anti")
+        name, _total = self._new_data_dir(table, kept.unionByName(rows))
+        self._commit(table, [name], branch=branch)
 
     def merge_cdc(
         self,
@@ -838,23 +764,12 @@ class ParquetLake:
         if not table_guarded:
             upserts = upserts.drop("last_version")
         if not self.exists(table):
-            df0 = self._prepare(table, upserts)
-            name, rows = self._new_data_dir(table, df0)
-            if rows == 0:
-                shutil.rmtree(self.root / table / name, ignore_errors=True)
-                return WriteReport(table, "merge_cdc", 0)
-            self._commit(table, [name])
-            return WriteReport(table, "merge_cdc", rows)
+            rep = self.append(upserts, table)
+            return WriteReport(table, "merge_cdc", rep.rows_written)
         n_upserts = upserts.count()
-        touched = log.select(key_col).distinct()
-        # with_tombstones: untouched keys' guard state survives the
-        # rewrite; touched keys' tombstones fall to the anti-join (the
-        # documented unguarded-overwrites-guard-state contract).
-        base = self.read(table, with_tombstones=True)
-        kept = base.join(F.broadcast(touched), key_col, "left_anti")
-        merged = kept.unionByName(self._prepare(table, upserts))
-        name, _total = self._new_data_dir(table, merged)
-        self._commit(table, [name])
+        self._upsert(
+            table, log.select(key_col).distinct(), self._prepare(table, upserts)
+        )
         return WriteReport(table, "merge_cdc", n_upserts)
 
     def _check_version_castable(
@@ -960,12 +875,7 @@ class ParquetLake:
         if not self.exists(table):
             incoming = split(final)
             n_upserts = incoming.filter(~F.col(TOMBSTONE_COL)).count()
-            df0 = self._prepare(table, incoming)
-            name, rows = self._new_data_dir(table, df0)
-            if rows == 0:
-                shutil.rmtree(self.root / table / name, ignore_errors=True)
-                return WriteReport(table, "merge_cdc", 0)
-            self._commit(table, [name])
+            self.append(incoming, table)
             return WriteReport(table, "merge_cdc", n_upserts)
         base = self.read(table, with_tombstones=True)
         if "last_version" in base.columns:
@@ -988,14 +898,10 @@ class ParquetLake:
         incoming = split(dec.drop("__base_v"))
         n_upserts = incoming.filter(~F.col(TOMBSTONE_COL)).count()
         # additive evolution: a previously-unguarded table gains
-        # last_version + _cdc_deleted (typed NULLs for older files)
+        # last_version + _cdc_deleted (typed NULLs for older files); the
+        # upsert's base read then scans with the evolved schema
         incoming = self._prepare(table, incoming, evolve=True)
-        kept = self.read(table, with_tombstones=True).join(
-            F.broadcast(dec.select(key_col)), key_col, "left_anti"
-        )
-        merged = align_to_schema(kept, self.schema(table)).unionByName(incoming)
-        name, _total = self._new_data_dir(table, merged)
-        self._commit(table, [name])
+        self._upsert(table, dec.select(key_col), incoming)
         return WriteReport(table, "merge_cdc", n_upserts)
 
     def compact_tombstones(
@@ -1115,8 +1021,6 @@ class ParquetLake:
         here. Time travel shortens to the kept window; the current
         snapshot is never touched. Returns the deleted data dirs
         (relative names) for audit logging."""
-        import shutil
-
         tdir = self.root / table
         keep = set(self._main_ancestry(table, limit=keep_last))
         # Tagged snapshots and branch HEADS are retention roots (Iceberg
@@ -1148,13 +1052,27 @@ class ParquetLake:
         table: str,
         disposition: str,
         primary_key: tuple[str, ...] | list[str] = (),
+        *,
+        branch: str | None = None,
     ) -> WriteReport:
         """Disposition dispatch, the destination entry point
-        (salesforce_pipeline.py:62-176)."""
+        (salesforce_pipeline.py:62-176).
+
+        With ``branch`` set the batch commits to that branch head
+        instead of main - the write half of write-audit-publish. The
+        table auto-creates and the branch forks at the current main
+        snapshot on first contact; merge reads its base from the branch,
+        so several staged batches compose before one audit +
+        :meth:`fast_forward` publishes them all."""
+        if branch is not None:
+            if not self.exists(table):
+                self.create_table(table, df.schema)
+            if branch not in self.branches(table):
+                self.create_branch(table, branch)
         if disposition == "append":
-            return self.append(df, table)
+            return self.append(df, table, branch=branch)
         if disposition == "replace":
-            return self.replace(df, table)
+            return self.replace(df, table, branch=branch)
         if disposition == "merge":
-            return self.merge(df, table, primary_key)
+            return self.merge(df, table, primary_key, branch=branch)
         raise ValueError(f"unknown write disposition: {disposition}")

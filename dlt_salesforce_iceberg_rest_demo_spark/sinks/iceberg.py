@@ -85,9 +85,8 @@ def dedupe_keep_last(df: DataFrame, primary_key: list[str]) -> DataFrame:
     """MERGE INTO rejects multiple source matches per target row, so the
     source batch is deduped keep-last first (the documented divergence
     from the reference's duplicate-preserving delete-then-insert -
-    SURVEY §7 "What's hard"). Deterministic: rows ordered by all
-    non-PK columns descending, exactly like ParquetLake.merge's
-    ``dedupe_batch`` option."""
+    SURVEY §7 "What's hard"; ParquetLake.merge keeps the duplicates).
+    Deterministic: rows ordered by all non-PK columns descending."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 

@@ -58,7 +58,9 @@ class TestCreateAndAppend:
         """Idle incremental poll (0 rows) must not grow the snapshot
         chain: no new manifest, no new data dir, pointer unchanged.
         This is the no-PK-merge/append analog of the merge empty-batch
-        guard - dlt never invokes the destination for an empty batch."""
+        guard - dlt never invokes the destination for an empty batch.
+        A first-contact merge is an append too: it creates the table
+        (version 0) and commits nothing."""
         lake = make_lake(spark, tmp_path)
         lake.append(df_of(spark, [Row(id=1, v="a")]), "t")
         before = sorted(p.name for p in (tmp_path / "lake" / "t").iterdir())
@@ -68,6 +70,11 @@ class TestCreateAndAppend:
         after = sorted(p.name for p in (tmp_path / "lake" / "t").iterdir())
         assert before == after
         assert lake.count("t") == 1
+
+        rep = lake.merge(empty, "new", ("id",))
+        assert rep.rows_written == 0
+        assert lake.current_version("new") == 0
+        assert not list((tmp_path / "lake" / "new").glob("data_*"))
 
     def test_append_aligns_schema(self, spark, tmp_path):
         lake = make_lake(spark, tmp_path)
@@ -122,13 +129,6 @@ class TestMerge:
         dup_batch = df_of(spark, [Row(id=1, v="x"), Row(id=1, v="y")])
         lake.merge(dup_batch, "t", ("id",))
         assert lake.count("t") == 2  # both duplicate rows present
-
-    def test_dedupe_batch_opt_in(self, spark, tmp_path):
-        lake = make_lake(spark, tmp_path)
-        lake.merge(df_of(spark, [Row(id=1, v="a")]), "t", ("id",))
-        dup_batch = df_of(spark, [Row(id=1, v="x"), Row(id=1, v="y")])
-        lake.merge(dup_batch, "t", ("id",), dedupe_batch=True)
-        assert lake.count("t") == 1
 
     def test_merge_without_pk_appends_with_flag(self, spark, tmp_path):
         # W4 guard (salesforce_pipeline.py:131-138)
@@ -800,7 +800,7 @@ class TestBranchesWap:
         lake.replace(df_of(spark, [Row(id=1, v="a")]), "t")
         main_v = lake.current_version("t")
         lake.create_branch("t", "audit")
-        lake.append_to_branch(df_of(spark, [Row(id=2, v="b")]), "t", "audit")
+        lake.write(df_of(spark, [Row(id=2, v="b")]), "t", "append", branch="audit")
         # isolation: main unchanged, branch sees the staged batch
         assert lake.current_version("t") == main_v
         assert lake.count("t") == 1
@@ -814,7 +814,7 @@ class TestBranchesWap:
         lake = make_lake(spark, tmp_path)
         lake.replace(df_of(spark, [Row(id=1, v="a")]), "t")
         lake.create_branch("t", "audit")
-        lake.append_to_branch(df_of(spark, [Row(id=2, v="bad")]), "t", "audit")
+        lake.write(df_of(spark, [Row(id=2, v="bad")]), "t", "append", branch="audit")
         lake.drop_branch("t", "audit")
         assert {r.id for r in lake.read("t").collect()} == {1}
         assert "audit" not in lake.branches("t")
@@ -823,7 +823,7 @@ class TestBranchesWap:
         lake = make_lake(spark, tmp_path)
         lake.replace(df_of(spark, [Row(id=1, v="a")]), "t")
         lake.create_branch("t", "audit")
-        lake.append_to_branch(df_of(spark, [Row(id=2, v="b")]), "t", "audit")
+        lake.write(df_of(spark, [Row(id=2, v="b")]), "t", "append", branch="audit")
         # main diverges after the fork
         lake.append(df_of(spark, [Row(id=9, v="z")]), "t")
         import pytest as _pytest
@@ -835,8 +835,8 @@ class TestBranchesWap:
         lake = make_lake(spark, tmp_path)
         lake.replace(df_of(spark, [Row(id=1, v="a")]), "t")
         lake.create_branch("t", "stage")
-        lake.append_to_branch(df_of(spark, [Row(id=2, v="b")]), "t", "stage")
-        lake.append_to_branch(df_of(spark, [Row(id=3, v="c")]), "t", "stage")
+        lake.write(df_of(spark, [Row(id=2, v="b")]), "t", "append", branch="stage")
+        lake.write(df_of(spark, [Row(id=3, v="c")]), "t", "append", branch="stage")
         lake.fast_forward("t", "stage")
         assert lake.count("t") == 3
 
@@ -850,7 +850,7 @@ class TestBranchesWap:
         lake = make_lake(spark, tmp_path)
         lake.replace(df_of(spark, [Row(id=1, v="good")]), "t")
         main_v = lake.current_version("t")
-        lake.write_to_branch(
+        lake.write(
             df_of(spark, [Row(id=2, v="rejected")]), "t", "append", branch="audit"
         )
         lake.drop_branch("t", "audit")
@@ -869,7 +869,7 @@ class TestBranchesWap:
         lake.replace(df_of(spark, [Row(id=1)]), "t")
         main_v = lake.current_version("t")
         lake.create_branch("t", "stage")
-        lake.append_to_branch(df_of(spark, [Row(id=2)]), "t", "stage")
+        lake.write(df_of(spark, [Row(id=2)]), "t", "append", branch="stage")
         time.sleep(0.01)
         assert lake.version_as_of("t", dt.datetime.now()) == main_v
 
@@ -880,7 +880,7 @@ class TestBranchesWap:
         lake = make_lake(spark, tmp_path)
         lake.replace(df_of(spark, [Row(id=1, v="m1")]), "t")
         v1 = lake.current_version("t")
-        lake.write_to_branch(
+        lake.write(
             df_of(spark, [Row(id=2, v="rejected")]), "t", "append", branch="audit"
         )
         v2 = lake.branches("t")["audit"]
@@ -904,8 +904,8 @@ class TestBranchesWap:
         lake = make_lake(spark, tmp_path)
         lake.replace(df_of(spark, [Row(id=1)]), "t")
         lake.create_branch("t", "stage")
-        lake.append_to_branch(df_of(spark, [Row(id=2)]), "t", "stage")
-        lake.append_to_branch(df_of(spark, [Row(id=3)]), "t", "stage")
+        lake.write(df_of(spark, [Row(id=2)]), "t", "append", branch="stage")
+        lake.write(df_of(spark, [Row(id=3)]), "t", "append", branch="stage")
         lake.vacuum("t", keep_last=1)  # keeps main head + branch HEAD only
         import pytest as _pytest
 
@@ -962,7 +962,7 @@ class TestBranchesWap:
         # Orphaned WAP staging commit: branch commit whose branch is
         # then dropped without publishing (failed audit).
         lake.create_branch("t", "wap")
-        lake.append_to_branch(df_of(spark, [Row(id=9, v="orphan")]), "t", "wap")
+        lake.write(df_of(spark, [Row(id=9, v="orphan")]), "t", "append", branch="wap")
         orphan = lake._branch_version("t", "wap")
         lake.drop_branch("t", "wap")
         lake.append(df_of(spark, [Row(id=2, v="v2")]), "t")
@@ -982,7 +982,7 @@ class TestBranchesWap:
         lake = make_lake(spark, tmp_path)
         lake.replace(df_of(spark, [Row(id=1, v="a")]), "t")
         lake.create_branch("t", "keepme")
-        lake.append_to_branch(df_of(spark, [Row(id=2, v="b")]), "t", "keepme")
+        lake.write(df_of(spark, [Row(id=2, v="b")]), "t", "append", branch="keepme")
         # several main commits so vacuum has something to expire
         for i in range(3):
             lake.append(df_of(spark, [Row(id=10 + i, v="x")]), "t")

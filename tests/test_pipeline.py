@@ -145,6 +145,16 @@ class TestWriteAuditPublish:
         p3.run(("account",), audit=lambda df, table: True)
         assert p3.lake.count("account") == 3
 
+    def test_failing_audit_on_first_load_leaves_nothing(self, spark, tmp_path):
+        # the first write auto-creates the table and forks the branch;
+        # a failed audit must leave an empty main and no cursor
+        p = make_pipeline(spark, tmp_path, version=1)
+        info = p.run(("account",), audit=lambda df, table: False)
+        assert info.total_rows == 0
+        assert p.lake.count("account") == 0
+        assert p.lake.branches("account") == {}
+        assert p.state.get("account") is None
+
     def test_wap_incremental_upsert_semantics_preserved(self, spark, tmp_path):
         # WAP merge == plain merge results, just routed through a branch
         pa = make_pipeline(spark, tmp_path / "plain", version=1)
